@@ -3,7 +3,7 @@
 A from-scratch engine (NOT a port) with the query / data-processing
 capabilities of the reference repo ``hasb73/hdfs-anomaly-detection``:
 declarative constraint DSL compiled to Catalyst predicates, per-column
-stats (null-rate, min/max, HLL distinct, length histograms), salted
+stats (null-rate, min/max, HLL distinct, length histograms), hash-aggregate
 uniqueness, referential integrity via broadcast / sort-merge joins,
 distribution-drift checks (KS / PSI over mergeable t-digest sketches),
 per-partition pass/fail verdicts with exact violation rows, and a

@@ -124,14 +124,14 @@ class Regex(Check):
 
 @dataclass(frozen=True)
 class Unique(Check):
-    """Key uniqueness via salted two-phase hash aggregation (runner-planned).
+    """Key uniqueness via a per-key hash-aggregate count over the narrow
+    frame (runner-planned); partial aggregation keeps hot keys cheap.
 
     Reference analogue: md5-content-hash dedup / skip-if-seen
     (``anomaly-detection-service/anomaly_detection_service.py:269-271,668-678``).
     """
 
     columns: tuple[str, ...] = ("conv_id", "turn_idx")
-    salted: bool = True
 
 
 @dataclass(frozen=True)

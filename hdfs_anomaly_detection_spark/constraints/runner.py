@@ -12,22 +12,20 @@ Plan shape (scale rationale):
   struct array (rows with no failures are dropped by ``explode`` for
   free). No per-check scans.
 * The narrow flagged frame is hash-repartitioned once on the cluster key
-  (conv_id); the reference-equality SMJ, dim joins, ordering windows,
-  uniqueness counts, per-partition row counts AND drift-metric digests
-  all ride that single exchange (subset co-partitioning) — in the
-  clustered plan the fact table is scanned exactly once per run, with
-  the persisted narrow frame (~50 B/row) feeding every output.
-  Freshness also aggregates from the narrow frame when its ts column
-  rides it (true for the standard suite via MonotonicOrder's tiebreak);
-  otherwise it falls back to a pruned ts scan.
-* Uniqueness without clustering runs as a salted two-phase aggregation
-  (partial counts per input split → final merge), so a hot
-  (conv_id, turn_idx) key never concentrates on one reducer; with
-  clustering the count is partition-local (strictly better — zero
-  cross-node movement for the same exact counts).
-* Verdicts = tiny aggregates: violation counts per (part_id, check_id)
-  joined against per-partition row counts. Nothing driver-side is
-  proportional to row count.
+  (conv_id); the reference-equality SMJ, dim joins and ordering windows
+  all ride that single exchange (subset co-partitioning). The frame
+  carries every column a check reads (unique keys, freshness ts, drift
+  metrics) and is persisted, so the fact table is scanned exactly once
+  per run and the narrow frame (~50 B/row) feeds every output.
+* Uniqueness is a plain per-key count over the narrow frame: Spark's
+  partial aggregation combines each map partition, so a hot key reaches
+  the final aggregate as at most one row per mapper; when the key holds
+  the cluster key the count is partition-local (no extra exchange).
+* Verdicts = one ``groupBy(part_id)`` over the narrow frame (row count,
+  ``count_if(flag)`` per check, ``max(ts)`` per freshness check) plus,
+  per Unique check, a per-partition roll-up of the same per-key counts
+  that yield its violation rows. Nothing driver-side is proportional to
+  row count.
 
 The per-row verdict record mirrors the reference's ``AnomalyResult``
 (``anomaly-detection-service/anomaly_detection_service.py:58-68``); the
@@ -37,8 +35,11 @@ per-partition pass/fail mirrors its OK/WARNING/CRITICAL CASE thresholds
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
+from functools import reduce
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -68,6 +69,18 @@ def part_id_expr(conv_col: str = "conv_id", n_buckets: int = 32) -> F.Column:
     return F.pmod(F.xxhash64(F.col(conv_col)), F.lit(n_buckets)).cast("int")
 
 
+def _count_verdict(chk: Check, n_rows: F.Column, n_violations: F.Column) -> F.Column:
+    """A count check's VERDICTS_SCHEMA fields (less part_id) as a struct:
+    passes if violations/rows ≤ ``max_violation_rate``."""
+    return F.struct(
+        F.lit(chk.name).alias("check_id"),
+        n_rows.cast("bigint").alias("n_rows"),
+        n_violations.cast("bigint").alias("n_violations"),
+        F.lit(None).cast("double").alias("statistic"),
+        (n_violations <= F.lit(float(chk.max_violation_rate)) * n_rows).alias("passed"),
+    )
+
+
 def reference_hashes(ref_df: DataFrame, chk) -> DataFrame:
     """Precompute the reference side of a TextEquals check as
     (keys..., canon_hash). The reference corpus is static across runs —
@@ -81,13 +94,24 @@ def reference_hashes(ref_df: DataFrame, chk) -> DataFrame:
     )
 
 
+@dataclass(frozen=True)
+class FlaggedPlan:
+    """Everything ``ValidationRunner._flagged`` plans, returned rather
+    than left on the runner (one runner may serve a foreachBatch handler
+    and a batch job at once)."""
+
+    frame: DataFrame  # the narrow flagged frame
+    flags: list[tuple[Check, str]]  # (check, boolean flag column)
+    drift_cols: dict[str, str]  # drift metric → its value column
+
+
 @dataclass
 class ValidationResult:
     violations: DataFrame  # VIOLATIONS_SCHEMA
     verdicts: DataFrame  # VERDICTS_SCHEMA
-    # the intermediate the runner persisted (narrow flagged frame or the
-    # violations frame); callers should ``unpersist()`` once both outputs
-    # are materialized so long-lived sessions don't accumulate cache
+    # the narrow flagged frame the runner persisted; callers should
+    # ``unpersist()`` once both outputs are materialized so long-lived
+    # sessions don't accumulate cache
     cached: DataFrame | None = None
 
     def unpersist(self) -> None:
@@ -157,7 +181,7 @@ class ValidationRunner:
 
     # ------------------------------------------------------------------ plan
 
-    def _flagged(self, fact: DataFrame) -> tuple[DataFrame, list[tuple[Check, str]]]:
+    def _flagged(self, fact: DataFrame) -> FlaggedPlan:
         """Two-stage flagging plan, shuffle-volume-aware:
 
         Stage A (map-only, pre-shuffle): evaluate every row-level
@@ -171,8 +195,8 @@ class ValidationRunner:
         Stage B: referential joins + ordering windows over the narrow
         frame only.
 
-        Returns (flagged_df, [(check, flag_col)]); precomputed detail
-        columns ride along as ``<flag_col>_d``.
+        Precomputed detail columns ride along as ``<flag_col>_d``. Pure:
+        the runner itself is left untouched.
         """
         row_checks = dsl.row_level(self.checks)
         ri_checks = dsl.of_type(self.checks, RefIntegrity)
@@ -188,6 +212,10 @@ class ValidationRunner:
             extra |= set(chk.fk)
         for chk in te_checks:
             extra |= set(chk.keys)
+        for chk in dsl.of_type(self.checks, Unique):
+            extra |= set(chk.columns)
+        for chk in dsl.of_type(self.checks, Freshness):
+            extra.add(chk.ts_col)
         # NOTE: ts (or any other payload column) enters the narrow frame
         # only if a check references it or the caller asked via carry_cols
         # — every surplus 8B/row column multiplies across all downstream
@@ -219,19 +247,16 @@ class ValidationRunner:
                 F.when(src.isNotNull(), F.xxhash64(lhs)).alias(f"__te{t}_h")
             )
         # drift metrics ride the narrow frame as one pre-computed double
-        # per check (e.g. length(text) — 8 B/row instead of a second full
+        # per metric (e.g. length(text) — 8 B/row instead of a second full
         # scan of the wide fact table later); 'turn_count' needs no column
         # at all (it aggregates the keys already present)
-        self._drift_cols: dict[str, str] = {}
-        for g, chk in enumerate(drift_checks):
-            if chk.metric == "turn_count":
-                self._drift_cols[chk.name] = "turn_count"
-            elif chk.metric == "text_length" and "text" in fact_cols:
-                select_cols.append(F.length(F.col("text")).cast("double").alias(f"__dm{g}"))
-                self._drift_cols[chk.name] = f"__dm{g}"
-            elif chk.metric in fact_cols:
-                select_cols.append(F.col(chk.metric).cast("double").alias(f"__dm{g}"))
-                self._drift_cols[chk.name] = f"__dm{g}"
+        drift_cols: dict[str, str] = {}
+        for chk in drift_checks:
+            if chk.metric == "turn_count" or chk.metric in drift_cols:
+                continue
+            src = F.length("text") if chk.metric == "text_length" else F.col(chk.metric)
+            drift_cols[chk.metric] = f"__dm{len(drift_cols)}"
+            select_cols.append(src.cast("double").alias(drift_cols[chk.metric]))
         df = fact.select(*select_cols)  # ← the narrow frame
 
         # single-exchange clustering: everything below (reference join,
@@ -243,7 +268,7 @@ class ValidationRunner:
         # session.get_spark (not here — mutating session conf mid-plan
         # would leak into unrelated queries on a shared session)
         n_shuffle = int(fact.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        clustered = self._clustered = bool(
+        clustered = bool(
             self.cluster_key is not None
             and self.cluster_key in fact.columns
             and (mono_checks or te_checks or ri_checks)
@@ -349,7 +374,7 @@ class ValidationRunner:
             ).withColumn(f"{col}_prev", prev)
             flags.append((chk, col))
 
-        return df, flags
+        return FlaggedPlan(df, flags, drift_cols)
 
     def _detail(self, chk: Check, flag_col: str) -> F.Column:
         if isinstance(chk, RefIntegrity):
@@ -377,7 +402,15 @@ class ValidationRunner:
             return chk.column
         return chk.column_name()
 
-    def _row_violations(self, flagged: DataFrame, flags: list[tuple[Check, str]]) -> DataFrame:
+    def _row_violations(
+        self,
+        flagged: DataFrame,
+        flags: list[tuple[Check, str]],
+        carry: tuple[str, ...] = (),
+    ) -> DataFrame:
+        """One VIOLATIONS_SCHEMA row per raised flag; ``carry`` columns
+        (e.g. the streaming watermark's ``ts``) ride between ``turn_idx``
+        and ``column``."""
         if not flags:
             return flagged.sparkSession.createDataFrame([], VIOLATIONS_SCHEMA)
         structs = [
@@ -396,6 +429,7 @@ class ValidationRunner:
                 "part_id",
                 "conv_id",
                 "turn_idx",
+                *carry,
                 F.explode(F.array_compact(F.array(*structs))).alias("v"),
             )
             .select(
@@ -403,220 +437,149 @@ class ValidationRunner:
                 F.col("v.check_id").alias("check_id"),
                 "conv_id",
                 "turn_idx",
+                *carry,
                 F.col("v.column").alias("column"),
                 F.col("v.detail").alias("detail"),
             )
         )
 
-    def _unique_violations(
-        self, fact: DataFrame, flagged: DataFrame | None = None
-    ) -> DataFrame | None:
-        """``flagged``: when the clustered narrow frame is available AND
-        the unique key contains the cluster key, count duplicates on it —
-        the frame is hash-partitioned by a subset of the grouping keys,
-        so the aggregation is partition-local: no extra scan of the fact
-        table and no extra shuffle. The salted two-phase aggregation
-        remains the path whenever clustering is unavailable (and is what
-        hot-key skew tests exercise)."""
-        out = None
-        for chk in dsl.of_type(self.checks, Unique):
-            key = list(chk.columns)
-            rides_cluster = (
-                flagged is not None
-                and self.cluster_key in key
-                and all(k in flagged.columns for k in key)
+    def _partition_verdicts(
+        self, frame: DataFrame, flags: list[tuple[Check, str]]
+    ) -> DataFrame:
+        """Count and freshness verdicts from ONE ``groupBy(part_id)`` over
+        the narrow frame — the row count, ``count_if(flag)`` per check and
+        the max-ts lag per Freshness check — unstacked into
+        VERDICTS_SCHEMA rows. Unique, Drift and SchemaConformance verdicts
+        are planned elsewhere."""
+        flag_of = {id(chk): col for chk, col in flags}
+        aggs = [F.count(F.lit(1)).alias("n_rows")]
+        rows = []
+        for i, chk in enumerate(self.checks):
+            col = f"__a{i}"
+            if isinstance(chk, Freshness):
+                as_of = chk.as_of if chk.as_of is not None else int(time.time())
+                lag = F.lit(as_of) - F.unix_timestamp(F.max(F.col(chk.ts_col)))
+                aggs.append(lag.cast("double").alias(col))
+                rows.append(
+                    F.struct(
+                        F.lit(chk.name).alias("check_id"),
+                        F.lit(None).cast("bigint").alias("n_rows"),
+                        F.lit(0).cast("bigint").alias("n_violations"),
+                        F.col(col).alias("statistic"),
+                        (F.col(col) <= chk.max_age_seconds).alias("passed"),
+                    )
+                )
+            elif not isinstance(chk, (Drift, SchemaConformance, Unique)):
+                # a TextEquals check without a reference plans no flag
+                n_violations = F.lit(0)
+                if id(chk) in flag_of:
+                    aggs.append(F.count_if(F.col(flag_of[id(chk)])).alias(col))
+                    n_violations = F.col(col)
+                rows.append(_count_verdict(chk, F.col("n_rows"), n_violations))
+        if not rows:
+            return frame.sparkSession.createDataFrame([], VERDICTS_SCHEMA)
+        return frame.groupBy("part_id").agg(*aggs).select(
+            "part_id", F.inline(F.array(*rows))
+        )
+
+    @staticmethod
+    def _unique(frame: DataFrame, chk: Unique) -> tuple[DataFrame, DataFrame]:
+        """(violation rows, per-partition verdicts) of one Unique check,
+        both from the same per-key count over the narrow frame. When the
+        frame is hash-partitioned on the cluster key and the key contains
+        it, the count is partition-local: no extra exchange."""
+        key = list(chk.columns)
+        totals = frame.groupBy("part_id", *key).agg(F.count(F.lit(1)).alias("__n"))
+        dupes = totals.filter(F.col("__n") > 1).select(
+            "part_id",
+            F.lit(chk.name).alias("check_id"),
+            (F.col("conv_id") if "conv_id" in key else F.lit(None)).cast("string").alias("conv_id"),
+            (F.col("turn_idx") if "turn_idx" in key else F.lit(None)).cast("int").alias("turn_idx"),
+            F.lit(",".join(key)).alias("column"),
+            F.format_string("duplicate key count=%s", F.col("__n").cast("string")).alias("detail"),
+        )
+        verdicts = (
+            totals.groupBy("part_id")
+            .agg(
+                F.sum("__n").alias("n_rows"),
+                F.count_if(F.col("__n") > 1).alias("n_violations"),
             )
-            if rides_cluster:
-                src = flagged.withColumnRenamed("part_id", "__pid")
-            else:
-                src = fact.withColumn("__pid", self.pid_expr())
-            if chk.salted and not rides_cluster:
-                # phase 1: partial counts keyed by input split (explicit salt)
-                partial = src.groupBy(
-                    "__pid", *key, F.spark_partition_id().alias("__salt")
-                ).agg(F.count(F.lit(1)).alias("__c"))
-                totals = partial.groupBy("__pid", *key).agg(F.sum("__c").alias("__n"))
-            else:
-                totals = src.groupBy("__pid", *key).agg(F.count(F.lit(1)).alias("__n"))
-            dupes = totals.filter(F.col("__n") > 1).select(
-                F.col("__pid").alias("part_id"),
-                F.lit(chk.name).alias("check_id"),
-                (F.col("conv_id") if "conv_id" in key else F.lit(None)).cast("string").alias("conv_id"),
-                (F.col("turn_idx") if "turn_idx" in key else F.lit(None)).cast("int").alias("turn_idx"),
-                F.lit(",".join(key)).alias("column"),
-                F.format_string("duplicate key count=%s", F.col("__n").cast("string")).alias("detail"),
+            .select(
+                "part_id",
+                F.inline(
+                    F.array(_count_verdict(chk, F.col("n_rows"), F.col("n_violations")))
+                ),
             )
-            out = dupes if out is None else out.unionByName(dupes)
-        return out
+        )
+        return dupes, verdicts
+
+    @staticmethod
+    def _metric_frame(plan: FlaggedPlan, frame: DataFrame, metric: str) -> DataFrame:
+        """(part_id, value) drift input, read from the persisted narrow
+        frame (the metric was pre-computed map-side as one double column;
+        'turn_count' aggregates the keys already present)."""
+        if metric == "turn_count":
+            return (
+                frame.groupBy("part_id", "conv_id")
+                .agg(F.count(F.lit(1)).cast("double").alias("value"))
+                .select("part_id", "value")
+            )
+        return frame.select(
+            "part_id", F.col(plan.drift_cols[metric]).alias("value")
+        ).filter(F.col("value").isNotNull())
 
     # ------------------------------------------------------------------ run
 
-    def run(self, fact: DataFrame, persist: bool = True) -> ValidationResult:
-        """``persist=True`` caches one intermediate so the expensive
-        flagged scan (full-row predicates + canonicalize + joins +
-        windows) executes once even though several outputs consume it:
+    def run(self, fact: DataFrame) -> ValidationResult:
+        """Plan the flagged scan, persist its narrow frame
+        (MEMORY_AND_DISK; ~50 B/row) and derive every output from it:
+        row violations (explode), uniqueness (per-key counts), the
+        per-partition count/freshness aggregate and drift digests. The
+        fact table is scanned exactly once per run.
 
-        * clustered plan: the NARROW flagged frame is persisted
-          (MEMORY_AND_DISK; ~50 B/row). Row violations (explode),
-          uniqueness counts (partition-local — the frame is already
-          hash-partitioned on the cluster key), per-partition row
-          counts, drift-metric digests and freshness max-ts aggregates
-          (when ts rides the frame) are all derived from it: the fact
-          table is scanned exactly once per run.
-        * unclustered plan: the (much smaller) violations frame is
-          persisted and uniqueness/row counts re-scan fact with pruned
-          columns; a Drift check still forces the narrow-frame cache so
-          digests never re-read the wide table.
-
-        The persisted intermediate is returned as ``result.cached`` —
-        call ``result.unpersist()`` once both outputs are materialized."""
-        from pyspark import StorageLevel
-
+        The persisted frame is returned as ``result.cached`` — call
+        ``result.unpersist()`` once both outputs are materialized."""
         spark = fact.sparkSession
-        flagged, flags = self._flagged(fact)
-        # reuse of the flagged frame by uniqueness/row-counts/drift only
-        # pays when it is cached — otherwise they would recompute the
-        # whole expensive scan and the pruned fact scans are cheaper.
-        # Drift metrics riding the narrow frame (self._drift_cols) make
-        # the cache worthwhile even without clustering: the digest pass
-        # then reads ~8 B/row from cache instead of re-scanning fact.
-        reuse = persist and (
-            getattr(self, "_clustered", False) or bool(self._drift_cols)
-        )
-        cached: DataFrame | None = None
-        if reuse:
-            flagged = flagged.persist(StorageLevel.MEMORY_AND_DISK)
-            cached = flagged
-        violations = self._row_violations(flagged, flags)
-        uniq = self._unique_violations(
-            fact, flagged if reuse and getattr(self, "_clustered", False) else None
-        )
-        if uniq is not None:
-            violations = violations.unionByName(uniq)
-        if persist and not reuse:
-            violations = violations.persist(StorageLevel.MEMORY_AND_DISK)
-            cached = violations
-
-        # per-partition row counts: from the cached narrow frame when
-        # available (tiny partial-agg shuffle), else a column-pruned scan
-        if reuse:
-            parts = flagged.groupBy("part_id").agg(F.count(F.lit(1)).alias("n_rows"))
-        else:
-            parts = fact.select(self.pid_expr().alias("part_id")).groupBy(
-                "part_id"
-            ).agg(F.count(F.lit(1)).alias("n_rows"))
-
-        count_checks = [
-            c
-            for c in self.checks
-            if not isinstance(c, (Drift, SchemaConformance, Freshness))
-        ]
-        grid = parts.crossJoin(
-            F.broadcast(
-                spark.createDataFrame(
-                    [(c.name, float(c.max_violation_rate)) for c in count_checks],
-                    "check_id string, max_rate double",
-                )
-            )
-        )
-        counts = violations.groupBy("part_id", "check_id").agg(
-            F.count(F.lit(1)).alias("n_violations")
-        )
-        verdicts = (
-            grid.join(counts, ["part_id", "check_id"], "left")
-            .select(
-                "part_id",
-                "check_id",
-                "n_rows",
-                F.coalesce(F.col("n_violations"), F.lit(0)).alias("n_violations"),
-                F.lit(None).cast("double").alias("statistic"),
-                (
-                    F.coalesce(F.col("n_violations"), F.lit(0))
-                    <= F.col("max_rate") * F.col("n_rows")
-                ).alias("passed"),
-            )
-        )
+        plan = self._flagged(fact)
+        frame = plan.frame.persist(StorageLevel.MEMORY_AND_DISK)
+        violations = [self._row_violations(frame, plan.flags)]
+        verdicts = [self._partition_verdicts(frame, plan.flags)]
+        for chk in dsl.of_type(self.checks, Unique):
+            dupes, counts = self._unique(frame, chk)
+            violations.append(dupes)
+            verdicts.append(counts)
 
         # dataset-level schema conformance: global -1 partition verdict
         for chk in dsl.of_type(self.checks, SchemaConformance):
             diffs = self._schema_diffs(spark, fact, chk)
             if diffs:
-                violations = violations.unionByName(
+                violations.append(
                     spark.createDataFrame(
                         [(-1, chk.name, None, None, c, d) for c, d in diffs],
                         VIOLATIONS_SCHEMA,
                     )
                 )
-            verdicts = verdicts.unionByName(
+            verdicts.append(
                 spark.createDataFrame(
                     [(-1, chk.name, 0, len(diffs), None, len(diffs) == 0)],
                     VERDICTS_SCHEMA,
                 )
             )
 
-        # per-partition freshness verdicts (tiny max-ts aggregate) — from
-        # the persisted narrow frame whenever ts already rides it (it
-        # does for the standard suite: MonotonicOrder's tiebreak carries
-        # ts), else a pruned fact scan
-        fresh_checks = dsl.of_type(self.checks, Freshness)
-        if fresh_checks:
-            import time as _time
-
-            for chk in fresh_checks:
-                as_of = chk.as_of if chk.as_of is not None else int(_time.time())
-                lag = (F.lit(as_of) - F.unix_timestamp(F.max(F.col(chk.ts_col)))).cast(
-                    "double"
-                )
-                if reuse and chk.ts_col in flagged.columns:
-                    grouped = flagged.groupBy("part_id")
-                else:
-                    grouped = fact.groupBy(self.pid_expr().alias("part_id"))
-                fv = (
-                    grouped.agg(lag.alias("statistic"))
-                    .select(
-                        "part_id",
-                        F.lit(chk.name).alias("check_id"),
-                        F.lit(None).cast("bigint").alias("n_rows"),
-                        F.lit(0).cast("bigint").alias("n_violations"),
-                        "statistic",
-                        (F.col("statistic") <= chk.max_age_seconds).alias("passed"),
-                    )
-                )
-                verdicts = verdicts.unionByName(fv)
-
         drift_checks = dsl.of_type(self.checks, Drift)
         if drift_checks and self.baselines:
             from hdfs_anomaly_detection_spark.sketch.drift import drift_verdicts
 
-            # feed the digests from the persisted narrow frame (the
-            # metric was pre-computed map-side as one double column):
-            # Drift adds ZERO extra fact scans to the clustered plan
-            metric_frames: dict[str, DataFrame] | None = None
-            if reuse:
-                metric_frames = {}
-                for chk in drift_checks:
-                    src = self._drift_cols.get(chk.name)
-                    if src == "turn_count":
-                        metric_frames[chk.metric] = (
-                            flagged.groupBy("part_id", "conv_id")
-                            .agg(F.count(F.lit(1)).cast("double").alias("value"))
-                            .select("part_id", "value")
-                        )
-                    elif src is not None:
-                        metric_frames[chk.metric] = flagged.select(
-                            "part_id", F.col(src).alias("value")
-                        ).filter(F.col("value").isNotNull())
-            dv = drift_verdicts(
-                fact,
-                drift_checks,
-                self.baselines,
-                n_buckets=self.n_buckets,
-                metric_frames=metric_frames,
-            )
-            verdicts = verdicts.unionByName(dv)
+            metric_frames = {
+                chk.metric: self._metric_frame(plan, frame, chk.metric)
+                for chk in drift_checks
+            }
+            verdicts.append(drift_verdicts(metric_frames, drift_checks, self.baselines))
 
         return ValidationResult(
-            violations=violations, verdicts=verdicts, cached=cached
+            violations=reduce(DataFrame.unionByName, violations),
+            verdicts=reduce(DataFrame.unionByName, verdicts),
+            cached=frame,
         )
 
     @staticmethod

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hdfs_anomaly_detection_spark.sketch.tdigest import (
@@ -143,18 +143,16 @@ def compute_baselines(
 
 
 def drift_verdicts(
-    fact: DataFrame,
+    metric_frames: dict[str, DataFrame],
     checks: list,  # list[dsl.Drift]
     baselines: dict[str, pd.DataFrame],
-    n_buckets: int = 32,
-    metric_frames: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
     """VERDICTS_SCHEMA rows: one per (part_id, drift-check), statistic =
     KS or PSI vs baseline, passed = statistic ≤ threshold.
 
-    ``metric_frames``: optional pre-built (part_id, value) frames keyed
-    by metric name — the runner passes projections of its persisted
-    narrow frame so the digest pass reads ~8 B/row from cache instead of
+    ``metric_frames``: the current run's (part_id, value) frame per
+    metric name — the runner passes projections of its persisted narrow
+    frame, so the digest pass reads ~8 B/row from cache instead of
     re-scanning the wide fact table (one fact scan per run, Drift
     included).
 
@@ -171,17 +169,15 @@ def drift_verdicts(
     part_ids: a current partition with no baseline digest contributes
     only its per-partition NaN/failed flag row, never the rolled-up
     merge. Driver-side cost stays O(partitions × centroids)."""
-    spark = fact.sparkSession
     rows: list[tuple] = []
     for chk in checks:
         base_pd = baselines.get(chk.metric)
         if base_pd is None:
             continue
         base_by_pid = {int(r["part_id"]): _to_digest(r) for _, r in base_pd.iterrows()}
-        mf = (metric_frames or {}).get(chk.metric)
-        if mf is None:
-            mf = metric_frame(fact, chk.metric, n_buckets)
-        cur_pd = digests_to_pandas(build_partition_digests(mf, chk.metric))
+        cur_pd = digests_to_pandas(
+            build_partition_digests(metric_frames[chk.metric], chk.metric)
+        )
         cur_digests: list[TDigest] = []
         matched_n = 0
         for _, r in cur_pd.iterrows():
@@ -230,4 +226,4 @@ def drift_verdicts(
             )
     from hdfs_anomaly_detection_spark.constraints.runner import VERDICTS_SCHEMA
 
-    return spark.createDataFrame(rows, VERDICTS_SCHEMA)
+    return SparkSession.active().createDataFrame(rows, VERDICTS_SCHEMA)

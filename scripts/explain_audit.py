@@ -12,8 +12,9 @@ import io
 import re
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def plan_of(df) -> str:
@@ -147,8 +148,7 @@ def main() -> None:
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # the tiny
     # fixture would auto-broadcast everything and hide the at-scale SMJ
     # shape; the explicitly hinted tools dim still broadcasts
-    flagged, flags = runner._flagged(fx.fact)
-    plan = plan_of(flagged)
+    plan = plan_of(runner._flagged(fx.fact).frame)
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     fmt = plan.split("== Physical Plan ==")[1]
     n_ex = len(re.findall(r"^\(\d+\) Exchange$", fmt, re.M))

@@ -2,13 +2,14 @@
 entry on Spark and its oracle_sql() on DuckDB at the same sf, compare
 row count, sorted-column schema, and an order-insensitive value hash.
 
-Usage: PYTHONPATH=/root/repo python3 scripts/oracle_check.py [sf_dir] [names...]
+Usage: python3 scripts/oracle_check.py [sf_dir] [names...]
 """
 
 from __future__ import annotations
 
 import hashlib
 import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
@@ -33,7 +34,7 @@ def value_hash(pdf: pd.DataFrame) -> str:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     import __spark_entry__ as entry
     from hdfs_anomaly_detection_spark.session import get_spark
 

@@ -43,7 +43,7 @@ def flagged_plan(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        flagged, _ = runner._flagged(fx.fact)
+        flagged = runner._flagged(fx.fact).frame
         plan = flagged._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)

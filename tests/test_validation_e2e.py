@@ -190,3 +190,26 @@ def test_corrupted_preset_runs(spark):
     viol = res.violations.toPandas()
     assert (viol["check_id"] == "turn_order").any()
     assert not res.verdicts.toPandas()["passed"].all()
+
+
+def test_plan_builder_leaves_runner_untouched(spark):
+    """``_flagged`` and ``run`` return everything they plan and write
+    nothing back onto the runner, so one runner can serve a foreachBatch
+    handler and a batch job at the same time."""
+    from hdfs_anomaly_detection_spark.constraints import Drift
+    from hdfs_anomaly_detection_spark.sketch.drift import compute_baselines
+
+    fx = build_fixture(spark, FixtureConfig(n_conversations=50))
+    runner = ValidationRunner(
+        default_transcript_checks() + [Drift("drift_len", metric="text_length")],
+        n_buckets=N_BUCKETS,
+        dims={"conversations": fx.conversations, "tools": fx.tools},
+        baselines=compute_baselines(fx.fact, ["text_length"], n_buckets=N_BUCKETS),
+    )
+    before = dict(vars(runner))
+    runner._flagged(fx.fact)
+    res = runner.run(fx.fact)
+    after = vars(runner)
+    assert after.keys() == before.keys()
+    assert all(after[k] is before[k] for k in before)
+    res.unpersist()
